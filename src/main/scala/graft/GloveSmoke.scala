@@ -19,9 +19,10 @@ object GloveSmoke {
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.table(spark, sfDir, "documents")
-    for ((label, distributed) <- Seq("broadcast" -> Some(false), "block" -> Some(true))) {
+    // a parameter budget of 0 sends the fixture's vocabulary to the block trainer
+    for ((label, budget) <- Seq("broadcast" -> Glove.MaxBroadcastParams, "block" -> 0L)) {
       val model = new Glove(dim = 16, window = 3, minCount = 5,
-        iterations = 10, numPartitions = 8, distributed = distributed).fit(docs)
+        iterations = 10, numPartitions = 8).fit(docs, "text", budget)
       val v = model.embeddings.count()
       val l = model.lossHistory
       val top = model.findSynonyms("data", 3).collect()

@@ -1,7 +1,7 @@
 package graft.glove
 
 import graft.text.{Cooc, Cooccurrence, Vocabulary}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -28,10 +28,11 @@ import org.apache.spark.storage.StorageLevel
   * §5.3 — quality gates, not hash gates: reduction order of floats is
   * parallelism-dependent by design).
   *
-  * Scale path: this broadcast loop carries 2·V·(dim+1) floats per
-  * iteration — fine to V ≈ a few 100k. For larger vocabularies use
-  * [[GloveBlockTrainer]] (parameters stay distributed; each iteration is
-  * a join-exchange expressed in the DataFrame API).
+  * Trainer choice (the size rule): the broadcast loop ships
+  * 2·V·(dim+1) parameters per iteration, so it runs while that stays
+  * within [[Glove.MaxBroadcastParams]]; beyond it [[GloveBlockTrainer]]
+  * keeps the parameters distributed (each iteration a join-exchange in
+  * the DataFrame API) and the vocabulary never reaches the driver.
   */
 class Glove(
     val dim: Int = 50,
@@ -43,11 +44,6 @@ class Glove(
     val iterations: Int = 25,
     val numPartitions: Int = 32,
     val seed: Long = 42L,
-    /** None = auto: broadcast while 2·V·(dim+1) parameters fit
-      * comfortably (< ~16M doubles ≈ 128 MB); block-partitioned
-      * ([[GloveBlockTrainer]]) beyond. Some(true/false) forces a path.
-      */
-    val distributed: Option[Boolean] = None,
     /** Canonical `--symmetric` flag: false = left-context-only windows. */
     val symmetric: Boolean = true,
     /** Canonical `--max-vocab`: keep only the top-N ranked words. */
@@ -68,91 +64,118 @@ class Glove(
     "maxVocab" -> maxVocab.map(_.toString).getOrElse(""),
     "distanceOverOriginalPositions" -> distanceOverOriginalPositions.toString)
 
-  def fit(documents: DataFrame, textCol: String = "text"): GloveModel = {
+  def fit(documents: DataFrame, textCol: String = "text"): GloveModel =
+    fit(documents, textCol, Glove.MaxBroadcastParams)
+
+  /** [[fit]] with the broadcast parameter budget as an argument; 0 sends
+    * any vocabulary to the block trainer.
+    */
+  private[graft] def fit(documents: DataFrame, textCol: String,
+      maxBroadcastParams: Long): GloveModel = {
+    // Stage 1: vocabulary (1-based ids by count desc, word asc), built
+    // once: the size rule and either trainer read the cached frame.
+    val vocab = Vocabulary.build(documents, minCount, textCol, maxVocab)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val v = vocab.count().toInt
+      require(v > 0, s"empty vocabulary (minCount=$minCount)")
+      val (embeddings, lossHistory) =
+        if (2L * v * (dim + 1) > maxBroadcastParams) trainBlocks(documents, textCol, vocab, v)
+        else trainBroadcast(documents, textCol, vocab)
+      new GloveModel(embeddings, dim, lossHistory, trainParams)
+    } finally vocab.unpersist()
+  }
+
+  /** Small V: broadcast vocabulary + flatMap co-occurrence kernel, then
+    * broadcast parameters + per-partition AdaGrad ([[GloveTrainer]]).
+    */
+  private def trainBroadcast(documents: DataFrame, textCol: String,
+      vocab: DataFrame): (DataFrame, Seq[Double]) = {
     val spark = documents.sparkSession
     import spark.implicits._
+    val rows = vocab.select("w", "id").as[(String, Long)].collect()
+    val words = new Array[String](rows.length)
+    rows.foreach { case (w, id) => words(id.toInt - 1) = w }
 
-    // Stage 1: vocabulary (dense 0-based ids by count desc, word asc).
-    val vocabDf = Vocabulary.build(documents, minCount, textCol, maxVocab)
-    val v = vocabDf.count().toInt
-    require(v > 0, s"empty vocabulary (minCount=$minCount)")
+    // Stage 2: co-occurrence matrix, partitioned deterministically and
+    // sorted within partitions so local SGD order is reproducible.
+    // (Stage 3 of the canonical toolkit — `shuffle` — is subsumed by
+    // the hash repartition itself.) The first iteration materialises it.
+    val cooc: Dataset[Cooc] = Cooccurrence.matrix(documents, words.zipWithIndex.toMap,
+        window, textCol, symmetric, distanceOverOriginalPositions)
+      .repartition(numPartitions, col("i"), col("j"))
+      .sortWithinPartitions("i", "j")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // Stage 4: broadcast + per-partition AdaGrad + delta merge.
+    val (vecs, lossHistory) = GloveTrainer.train(
+      cooc, words.length, dim, xMax, alpha, learningRate, iterations, seed)
+    cooc.unpersist()
+    val out = words.indices.map(i => (words(i), i, vecs(i)))
+    (spark.createDataFrame(out).toDF("word", "id", "vec"), lossHistory)
+  }
 
-    val useBlock = distributed.getOrElse(2L * v * (dim + 1) > 16_000_000L)
-    if (useBlock) {
-      // Large-V path: the vocabulary NEVER touches the driver — tokens
-      // are mapped to ids by join (Cooccurrence.matrixViaJoin) and
-      // parameters stay distributed (GloveBlockTrainer).
-      val vocab0 = vocabDf
-        .select(col("w"), (col("id") - 1).cast("int").as("id0"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val docsWithId = documents.withColumn("__gid", monotonically_increasing_id())
-      val cooc: Dataset[Cooc] = Cooccurrence
-        .matrixViaJoin(docsWithId, vocab0, window, "__gid", textCol, symmetric,
-          distanceOverOriginalPositions)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val trainer = new GloveBlockTrainer(dim, xMax, alpha, learningRate,
-        iterations, numPartitions, seed)
-      val (vecs, lossHistory) = trainer.train(cooc, v)
-      cooc.unpersist()
-      val embeddings = vocab0
-        .join(vecs, vocab0("id0") === vecs("id"))
-        .select(col("w").as("word"), col("id"), col("vec"))
-      vocab0.unpersist()
-      new GloveModel(embeddings, dim, lossHistory, trainParams)
-    } else {
-      // Small-V path: broadcast vocabulary + flatMap kernel.
-      val vocabRows = vocabDf.select("w", "id").as[(String, Long)].collect()
-      val vocab: Map[String, Int] = vocabRows.map { case (w, id) => (w, id.toInt - 1) }.toMap
-      val words: Array[String] = {
-        val arr = new Array[String](vocab.size)
-        vocab.foreach { case (w, i) => arr(i) = w }
-        arr
-      }
-
-      // Stage 2: co-occurrence matrix, partitioned deterministically and
-      // sorted within partitions so local SGD order is reproducible.
-      // (Stage 3 of the canonical toolkit — `shuffle` — is subsumed by
-      // the hash repartition itself.)
-      val cooc: Dataset[Cooc] = Cooccurrence.matrix(documents, vocab, window,
-          textCol, symmetric, distanceOverOriginalPositions)
-        .repartition(numPartitions, col("i"), col("j"))
-        .sortWithinPartitions("i", "j")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nnz = cooc.count() // materialize
-      // Stage 4 (small V): broadcast + per-partition AdaGrad + delta merge.
-      val trained = GloveTrainer.train(
-        cooc, v, dim, xMax, alpha, learningRate, iterations, seed)
-      cooc.unpersist()
-
-      // Output vectors: W + W̃ (GloVe §4.2).
-      val out = (0 until v).map { i =>
-        val vec = new Array[Float](dim)
-        var k = 0
-        while (k < dim) {
-          vec(k) = (trained.wMain(i * dim + k) + trained.wCtx(i * dim + k)).toFloat
-          k += 1
-        }
-        (words(i), i, vec)
-      }
-      val embeddings = spark.createDataFrame(out).toDF("word", "id", "vec")
-      new GloveModel(embeddings, dim, trained.lossHistory, trainParams)
-    }
+  /** Large V: tokens map to ids by join ([[Cooccurrence.matrixViaJoin]])
+    * and parameters stay distributed ([[GloveBlockTrainer]]).
+    */
+  private def trainBlocks(documents: DataFrame, textCol: String,
+      vocab: DataFrame, v: Int): (DataFrame, Seq[Double]) = {
+    val vocab0 = vocab.select(col("w"), (col("id") - 1).cast("int").as("id0"))
+    val docsWithId = documents.withColumn("__gid", monotonically_increasing_id())
+    val cooc: Dataset[Cooc] = Cooccurrence
+      .matrixViaJoin(docsWithId, vocab0, window, "__gid", textCol, symmetric,
+        distanceOverOriginalPositions)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (vecs, lossHistory) = new GloveBlockTrainer(dim, xMax, alpha, learningRate,
+      iterations, numPartitions, seed).train(cooc, v)
+    cooc.unpersist()
+    // Materialised while the vocabulary is still cached: left lazy, every
+    // later query on the model would rebuild the vocabulary from the corpus.
+    val embeddings = vocab0
+      .join(vecs, vocab0("id0") === vecs("id"))
+      .select(col("w").as("word"), col("id"), col("vec"))
+      .localCheckpoint(eager = true)
+    (embeddings, lossHistory)
   }
 }
 
-/** Final parameters + loss telemetry from a training run. */
-private[glove] case class TrainedParams(
-    wMain: Array[Double], wCtx: Array[Double],
-    bMain: Array[Double], bCtx: Array[Double],
-    lossHistory: Seq[Double])
+object Glove {
+  /** The size rule: the broadcast trainer runs while its 2·V·(dim+1)
+    * per-iteration parameters stay within this many doubles (≈ 128 MB).
+    */
+  private[graft] val MaxBroadcastParams = 16_000_000L
+}
+
+/** The GloVe objective both trainers minimise, per co-occurrence cell. */
+private[glove] object GloveObjective {
+  /** Weighting f(x) = (x/xMax)^alpha, capped at 1. */
+  final def weight(x: Double, xMax: Double, alpha: Double): Double =
+    if (x < xMax) math.pow(x / xMax, alpha) else 1.0
+
+  /** Residual of the score wᵢᵀw̃ⱼ + bᵢ + b̃ⱼ against the ln X target. */
+  final def residual(score: Double, x: Double): Double = score - math.log(x)
+
+  /** The cell's loss term ½·f·diff². */
+  final def loss(f: Double, diff: Double): Double = 0.5 * (f * diff) * diff
+
+  /** Gradient scale f·diff clipped to ±100, as in the canonical toolkit,
+    * to keep early iterations stable.
+    */
+  final def clippedGrad(f: Double, diff: Double): Double = {
+    val g = f * diff
+    if (g > 100.0) 100.0 else if (g < -100.0) -100.0 else g
+  }
+}
 
 private[glove] object GloveTrainer {
 
-  /** Broadcast + per-partition local AdaGrad + treeAggregate of deltas. */
+  /** Broadcast + per-partition local AdaGrad + treeAggregate of deltas.
+    * Returns the output vectors W + W̃ (GloVe §4.2) by id, and the loss
+    * history.
+    */
   def train(
       cooc: Dataset[Cooc], v: Int, dim: Int,
       xMax: Double, alpha: Double, lr: Double,
-      iterations: Int, seed: Long): TrainedParams = {
+      iterations: Int, seed: Long): (Array[Array[Float]], Seq[Double]) = {
 
     val sc = cooc.sparkSession.sparkContext
     val rng = new java.util.Random(seed)
@@ -183,17 +206,15 @@ private[glove] object GloveTrainer {
         var n = 0L; var loss = 0.0
         iter.foreach { c =>
           val i = c.i; val j = c.j
-          val f = if (c.x < xMax) math.pow(c.x / xMax, alpha) else 1.0
+          val f = GloveObjective.weight(c.x, xMax, alpha)
           var dotv = lb1(i) + lb2(j)
           var k = 0
           val oi = i * dim; val oj = j * dim
           while (k < dim) { dotv += lw1(oi + k) * lw2(oj + k); k += 1 }
-          val diff = dotv - math.log(c.x)
-          val fdiff = f * diff
-          loss += 0.5 * fdiff * diff
-          // AdaGrad updates (clip fdiff like the canonical toolkit to
-          // keep early iterations stable).
-          val g = if (fdiff > 100.0) 100.0 else if (fdiff < -100.0) -100.0 else fdiff
+          val diff = GloveObjective.residual(dotv, c.x)
+          loss += GloveObjective.loss(f, diff)
+          // AdaGrad updates
+          val g = GloveObjective.clippedGrad(f, diff)
           k = 0
           while (k < dim) {
             val gi = g * lw2(oj + k); val gj = g * lw1(oi + k)
@@ -240,6 +261,7 @@ private[glove] object GloveTrainer {
       losses += (if (totalN == 0) 0.0 else totalLoss / totalN)
       it += 1
     }
-    TrainedParams(wMain, wCtx, bMain, bCtx, losses.toSeq)
+    val vecs = Array.tabulate(v, dim)((i, k) => (wMain(i * dim + k) + wCtx(i * dim + k)).toFloat)
+    (vecs, losses.toSeq)
   }
 }

@@ -27,8 +27,8 @@ private[glove] case class BGrad(id: Int, dw: Array[Double], db: Double,
   * Two shuffles per iteration (the second join and the gradient
   * reduce); AQE balances skewed ids (hot head-words). This is
   * synchronous batch AdaGrad — a documented deviation from the
-  * canonical toolkit's sequential/Hogwild updates (SURVEY §7.3.1): same
-  * objective and weighting, updates applied once per iteration from
+  * canonical toolkit's sequential/Hogwild updates (SURVEY §7.3.1): the
+  * same [[GloveObjective]], updates applied once per mini-batch from
   * summed gradients. Loss telemetry and quality gates, not float
   * equality with the broadcast path, define correctness (§5.3).
   *
@@ -43,14 +43,8 @@ class GloveBlockTrainer(
     val learningRate: Double = 0.05,
     val iterations: Int = 25,
     val numPartitions: Int = 32,
-    val seed: Long = 42L,
-    /** Mini-batches per epoch: the co-occurrence matrix is hash-split
-      * into this many shards and parameters update after each shard —
-      * m gradient steps per epoch instead of one, closing most of the
-      * convergence gap to per-example SGD while staying a pure
-      * join-exchange pipeline. 1 = full-batch.
-      */
-    val miniBatches: Int = 4) extends Serializable {
+    val seed: Long = 42L) extends Serializable {
+  import GloveBlockTrainer.MiniBatches
 
   /** Deterministic per-id init in [-0.5,0.5]/dim, derived from
     * xxhash-style mixing of (seed, id, k) — no driver-side RNG state.
@@ -80,10 +74,9 @@ class GloveBlockTrainer(
     import spark.implicits._
     val d = dim; val xm = xMax; val al = alpha; val lr = learningRate
 
-    val m = math.max(1, miniBatches)
     // one cached shard per mini-batch (deterministic hash split)
-    val shards: IndexedSeq[Dataset[Cooc]] = (0 until m).map { b =>
-      cooc.filter(pmod(xxhash64(col("i"), col("j")), lit(m.toLong)) === b)
+    val shards: IndexedSeq[Dataset[Cooc]] = (0 until MiniBatches).map { b =>
+      cooc.filter(pmod(xxhash64(col("i"), col("j")), lit(MiniBatches.toLong)) === b)
         .repartition(numPartitions, col("i"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     }
@@ -104,14 +97,13 @@ class GloveBlockTrainer(
       val j1 = shard.joinWith(main, shard("i") === main("id"))
       val joined = j1.joinWith(ctx, j1("_1.j") === ctx("id"))
       val grads: Dataset[BGrad] = joined.flatMap { case ((c, pi), pj) =>
-        val f = if (c.x < xm) math.pow(c.x / xm, al) else 1.0
+        val f = GloveObjective.weight(c.x, xm, al)
         var dot = pi.b + pj.b
         var k = 0
         while (k < d) { dot += pi.w(k) * pj.w(k); k += 1 }
-        val diff = dot - math.log(c.x)
-        val fdiff0 = f * diff
-        val fdiff = if (fdiff0 > 100.0) 100.0 else if (fdiff0 < -100.0) -100.0 else fdiff0
-        val loss = 0.5 * fdiff0 * diff
+        val diff = GloveObjective.residual(dot, c.x)
+        val fdiff = GloveObjective.clippedGrad(f, diff)
+        val loss = GloveObjective.loss(f, diff)
         val dwi = new Array[Double](d); val dwj = new Array[Double](d)
         k = 0
         while (k < d) { dwi(k) = fdiff * pj.w(k); dwj(k) = fdiff * pi.w(k); k += 1 }
@@ -130,6 +122,9 @@ class GloveBlockTrainer(
       def applyUpdates(params: Dataset[BParam], isMain: Boolean): Dataset[BParam] = {
         val side = reduced.filter(g => if (isMain) g.id >= 0 else g.id < 0)
           .map(g => if (g.id >= 0) g else BGrad(-g.id - 1, g.dw, g.db, g.loss, g.n))
+          // a shard's gradients can fall under the broadcast threshold;
+          // broadcasting them would collect them on the driver
+          .hint("merge")
         params.joinWith(side, params("id") === side("id"), "left_outer")
           .map { case (p, g) =>
             if (g == null) p
@@ -147,19 +142,17 @@ class GloveBlockTrainer(
           }
       }
 
+      // localCheckpoint keeps the new blocks and truncates the growing
+      // lineage (iteration count times two joins would otherwise blow up
+      // planning time)
       val newMain = applyUpdates(main, isMain = true)
         .repartition(numPartitions, col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager = true)
       val newCtx = applyUpdates(ctx, isMain = false)
         .repartition(numPartitions, col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // localCheckpoint truncates the growing lineage (iteration count
-      // times two joins would otherwise blow up planning time)
-      val mainCp = newMain.localCheckpoint(eager = true)
-      val ctxCp = newCtx.localCheckpoint(eager = true)
+        .localCheckpoint(eager = true)
       main.unpersist(); ctx.unpersist(); reduced.unpersist()
-      newMain.unpersist(); newCtx.unpersist()
-      main = mainCp; ctx = ctxCp
+      main = newMain; ctx = newCtx
       }
       losses += epochLoss / nnz
       it += 1
@@ -175,4 +168,14 @@ class GloveBlockTrainer(
     shards.foreach(_.unpersist())
     (out, losses.toSeq)
   }
+}
+
+object GloveBlockTrainer {
+  /** Mini-batches per epoch: the co-occurrence matrix is hash-split into
+    * this many shards and parameters update after each shard — four
+    * gradient steps per epoch instead of one, closing most of the
+    * convergence gap to per-example SGD while staying a pure
+    * join-exchange pipeline.
+    */
+  private val MiniBatches = 4
 }

@@ -59,7 +59,7 @@ case class PipelineReport(
   * join alone ran twice, and at 100 TB the multiplier applies to the
   * dominant scrub/langid/quality cost. CorpusPipelineSpec pins
   * exactly-once execution of the text stages with a row-level
-  * accumulator; PerfLab carries the A/B against the naive-count form.)
+  * accumulator.)
   *
   * The returned DataFrame is persisted and already materialized — use it
   * (typically `out.write...`) and call `out.unpersist()` when done; no

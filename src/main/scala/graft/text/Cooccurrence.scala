@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** One (i,j) cell of the sparse co-occurrence matrix (GloVe stage 2). */
@@ -57,12 +57,6 @@ object Cooccurrence {
       .toDF("w1", "w2", "wt")
   }
 
-  /** Aggregated word-level co-occurrence: (w1, w2, x = Σ 1/d, c = #instances). */
-  def aggregated(documents: DataFrame, window: Int, textCol: String = "text"): DataFrame =
-    wordPairs(documents, window, textCol)
-      .groupBy("w1", "w2")
-      .agg(sum("wt").as("x"), count(lit(1)).as("c"))
-
   /** O(n·w) forward-scan kernel over one document's kept-token stream.
     * `pos(k)` is the distance-defining position of kept token k — the
     * kept index itself (default mode, positions re-measured after OOV
@@ -88,6 +82,17 @@ object Cooccurrence {
       i += 1
     }
     out.toSeq
+  }
+
+  /** Sums the pair instances of each (i, j) cell into one matrix entry. */
+  private def sumCells(pairs: Dataset[Cooc]): Dataset[Cooc] = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    pairs
+      .groupByKey(c => (c.i, c.j))
+      .mapValues(_.x)
+      .reduceGroups(_ + _)
+      .map { case ((i, j), x) => Cooc(i, j, x) }
   }
 
   /** Id-space matrix with a DISTRIBUTED vocabulary (the large-V path):
@@ -135,10 +140,7 @@ object Cooccurrence {
         }
         emitPairs(pos, ids, w, symmetric)
       }
-      .groupByKey(c => (c.i, c.j))
-      .mapValues(_.x)
-      .reduceGroups(_ + _)
-      .map { case ((i, j), x) => Cooc(i, j, x) }
+      .transform(sumCells)
   }
 
   /** Id-space sparse matrix for training (broadcast-vocabulary path):
@@ -177,9 +179,6 @@ object Cooccurrence {
         }
         emitPairs(posBuf.toArray, idsBuf.toArray, window, symmetric)
       }
-      .groupByKey(c => (c.i, c.j))
-      .mapValues(_.x)
-      .reduceGroups(_ + _)
-      .map { case ((i, j), x) => Cooc(i, j, x) }
+      .transform(sumCells)
   }
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   */
 object Vocabulary {
 
-  /** Oracle-exact formulation: unpartitioned `row_number()` window.
-    * Correct at any V but single-partition for the rank assignment
-    * (Spark's W-7 hazard) — fine to a few million words.
+  /** Unpartitioned `row_number()` window: correct at any V but
+    * single-partition for the rank assignment (Spark's W-7 hazard) —
+    * fine to a few million words.
     * Output: (w STRING, c BIGINT, id BIGINT), id starting at 1.
     *
     * `maxVocab` keeps only the top-N ranked words (canonical toolkit's
@@ -33,27 +33,5 @@ object Vocabulary {
       .select(col("w"), col("c"),
         row_number().over(Window.orderBy(desc("c"), asc("w"))).cast("long").as("id"))
     maxVocab.fold(ranked)(m => ranked.filter(col("id") <= m))
-  }
-
-  /** Scale formulation: sorted RDD `zipWithIndex` — no single-partition
-    * window, works at 100M+ vocab. Produces byte-identical output to
-    * [[build]] (equivalence is property-tested).
-    */
-  def buildScalable(documents: DataFrame, minCount: Long, textCol: String = "text",
-      maxVocab: Option[Long] = None): DataFrame = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    val counts = documents
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w")
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= minCount)
-      .as[(String, Long)]
-    val ranked = counts.rdd
-      .sortBy({ case (w, c) => (-c, w) }, ascending = true)
-      .zipWithIndex()
-      .map { case ((w, c), idx) => (w, c, idx + 1L) }
-    maxVocab.fold(ranked)(m => ranked.filter(_._3 <= m)).toDF("w", "c", "id")
   }
 }

@@ -1,6 +1,7 @@
 package graft.glove
 
 import graft.SparkFixture
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quality gates for the block-partitioned (large-V) trainer — same
@@ -21,9 +22,10 @@ class GloveBlockSpec extends AnyFunSuite with SparkFixture {
     spark.createDataFrame(docs).toDF("doc_id", "text")
   }
 
-  private def fit(iters: Int) =
+  // a parameter budget of 0 sends even this 4-word vocabulary to the block trainer
+  private def fit(iters: Int, docs: DataFrame = corpus) =
     new Glove(dim = 8, window = 2, minCount = 1, iterations = iters,
-      numPartitions = 4, seed = 42L, distributed = Some(true)).fit(corpus)
+      numPartitions = 4, seed = 42L).fit(docs, "text", 0L)
 
   test("block trainer: loss decreases, finite, and neighbors follow co-occurrence") {
     val m = fit(12)
@@ -33,6 +35,19 @@ class GloveBlockSpec extends AnyFunSuite with SparkFixture {
     assert(m.embeddings.count() == 4)
     val nn = m.findSynonyms("aa", 1).collect()(0).getString(0)
     assert(nn == "bb", s"nearest neighbor of 'aa' was '$nn'")
+  }
+
+  test("block-path model answers queries without re-reading the corpus") {
+    // A row accumulator under the corpus counts every document row read.
+    // The fitted embeddings must not lean on the released vocabulary:
+    // a lazy vocab ⋈ vectors join would rebuild it on every query.
+    val acc = spark.sparkContext.longAccumulator("blockDocRows")
+    val counted = corpus.filter((_: Row) => { acc.add(1); true })
+    val m = fit(2, counted)
+    assert(acc.value > 0)
+    acc.reset()
+    m.findSynonyms("aa", 1).collect()
+    assert(acc.value == 0, s"findSynonyms read ${acc.value} document rows")
   }
 
   test("block trainer: auto strategy picks broadcast for tiny vocab") {
@@ -67,7 +82,7 @@ class GloveBlockSpec extends AnyFunSuite with SparkFixture {
       }
       val (emb, losses) =
         new GloveBlockTrainer(dim = 8, iterations = 2, numPartitions = 4,
-          seed = 42L, miniBatches = 1).train(cooc, v)
+          seed = 42L).train(cooc, v)
       assert(losses.size == 2 && losses.forall(x => !x.isNaN && !x.isInfinite))
       assert(losses(1) < losses(0), s"loss did not decrease: $losses")
       assert(emb.count() == v)

@@ -1,6 +1,7 @@
 package graft.glove
 
 import graft.SparkFixture
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** T-6 quality gates (SURVEY §5.3) — property tests, never hash-matches
@@ -30,6 +31,15 @@ class GloveSpec extends AnyFunSuite with SparkFixture {
     val l = m.lossHistory
     assert(l.nonEmpty && l.forall(x => !x.isNaN && !x.isInfinite))
     assert(l.last < l.head, s"loss did not decrease: ${l.head} -> ${l.last}")
+  }
+
+  test("a broadcast-path fit scans the corpus twice: vocabulary, then co-occurrence") {
+    val n = corpus.count()
+    val acc = spark.sparkContext.longAccumulator("gloveDocRows")
+    val counted = corpus.filter((_: Row) => { acc.add(1); true })
+    new Glove(dim = 8, window = 2, minCount = 1, iterations = 2,
+      numPartitions = 4).fit(counted)
+    assert(acc.value == 2 * n, s"fit read ${acc.value} document rows from a $n-row corpus")
   }
 
   test("seeded run is reproducible at fixed parallelism") {

@@ -95,7 +95,7 @@ class InventorySpec extends AnyFunSuite with SparkFixture {
     val vocab = graft.text.Vocabulary.build(corpus, minCount = 1).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(vocab == Map("alpha" -> 3L, "beta" -> 2L, "gamma" -> 1L))
-    val pairs = graft.text.Cooccurrence.aggregated(corpus, window = 1)
+    val pairs = graft.text.Cooccurrence.wordPairs(corpus, window = 1)
     assert(pairs.count() > 0)
   }
 

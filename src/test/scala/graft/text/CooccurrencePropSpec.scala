@@ -96,7 +96,8 @@ class CooccurrencePropSpec extends AnyFunSuite with SparkFixture {
   test("aggregated matrix is symmetric on generated corpora") {
     for (docs <- samples(corpusGen, 6)) {
       val df = spark.createDataFrame(docs).toDF("doc_id", "text")
-      val agg = Cooccurrence.aggregated(df, window = 2).collect()
+      val agg = Cooccurrence.wordPairs(df, window = 2)
+        .groupBy("w1", "w2").agg(sum("wt")).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
       agg.foreach { case ((w1, w2), x) =>
         assert(math.abs(agg((w2, w1)) - x) < 1e-9, s"asymmetric at ($w1,$w2)")

@@ -48,7 +48,9 @@ class CooccurrenceSpec extends AnyFunSuite with SparkFixture {
 
   test("aggregated matrix is symmetric") {
     val docs = randomCorpus(50, 7L)
-    val agg = Cooccurrence.aggregated(docs, window = 2)
+    val agg = Cooccurrence.wordPairs(docs, window = 2)
+      .groupBy("w1", "w2")
+      .agg(sum("wt").as("x"), count(lit(1)).as("c"))
     val flipped = agg.select(col("w2").as("w1"), col("w1").as("w2"), col("x"), col("c"))
     assert(agg.except(flipped).isEmpty && flipped.except(agg).isEmpty)
   }

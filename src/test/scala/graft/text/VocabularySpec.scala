@@ -3,28 +3,18 @@ package graft.text
 import graft.{SparkFixture, Tables}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** T-3: window formulation ≡ scalable zipWithIndex formulation; dense
-  * 1-based ids ordered by (count desc, word asc); minCount respected.
+/** T-3: dense 1-based ids ordered by (count desc, word asc); minCount
+  * and maxVocab respected.
   */
 class VocabularySpec extends AnyFunSuite with SparkFixture {
 
-  test("build equals buildScalable on the fixture corpus") {
-    val docs = Tables.table(spark, sf0001, "documents")
-    val a = Vocabulary.build(docs, minCount = 2).collect().sortBy(_.getLong(2))
-    val b = Vocabulary.buildScalable(docs, minCount = 2).collect().sortBy(_.getLong(2))
-    assert(a.map(_.toSeq).toSeq == b.map(_.toSeq).toSeq)
-  }
-
-  test("maxVocab keeps exactly the top-N ranks in both formulations") {
+  test("maxVocab keeps exactly the top-N ranks") {
     val docs = Tables.table(spark, sf0001, "documents")
     val full = Vocabulary.build(docs, minCount = 2).collect().sortBy(_.getLong(2))
     val cut = Vocabulary.build(docs, minCount = 2, maxVocab = Some(10L))
       .collect().sortBy(_.getLong(2))
-    val cutScalable = Vocabulary.buildScalable(docs, minCount = 2, maxVocab = Some(10L))
-      .collect().sortBy(_.getLong(2))
     assert(cut.length == 10)
     assert(cut.map(_.toSeq).toSeq == full.take(10).map(_.toSeq).toSeq)
-    assert(cut.map(_.toSeq).toSeq == cutScalable.map(_.toSeq).toSeq)
   }
 
   test("ids are dense, 1-based, ranked by count desc then word asc") {
