@@ -17,7 +17,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Execution model (SURVEY §3 entry 3):
   *  - vocab + co-occurrence are ordinary Spark jobs (tokenize → count →
-  *    flatMap kernel → reduce), the matrix cached MEMORY_AND_DISK;
+  *    bounded per-task combine → one shuffle into the trainer's
+  *    layout), the matrix cached MEMORY_AND_DISK;
   *  - each training iteration broadcasts current parameters, computes
   *    per-partition AdaGrad updates locally (Hogwild-style local SGD over
   *    each partition's records), then `treeAggregate`s parameter deltas
@@ -53,6 +54,12 @@ class Glove(
       * false = distances re-measured over kept tokens.
       */
     val distanceOverOriginalPositions: Boolean = false) extends Serializable {
+  require(dim > 0, s"dim must be positive, got $dim")
+  require(window > 0, s"window must be positive, got $window")
+  require(iterations > 0, s"iterations must be positive, got $iterations")
+  require(numPartitions > 0, s"numPartitions must be positive, got $numPartitions")
+  require(xMax > 0, s"xMax must be positive, got $xMax")
+  require(learningRate > 0, s"learningRate must be positive, got $learningRate")
 
   /** Hyperparameters persisted with the model (GloveModel.save/load). */
   private def trainParams: Map[String, String] = Map(
@@ -86,7 +93,7 @@ class Glove(
     } finally vocab.unpersist()
   }
 
-  /** Small V: broadcast vocabulary + flatMap co-occurrence kernel, then
+  /** Small V: broadcast vocabulary + co-occurrence kernel, then
     * broadcast parameters + per-partition AdaGrad ([[GloveTrainer]]).
     */
   private def trainBroadcast(documents: DataFrame, textCol: String,
@@ -97,19 +104,19 @@ class Glove(
     val words = new Array[String](rows.length)
     rows.foreach { case (w, id) => words(id.toInt - 1) = w }
 
-    // Stage 2: co-occurrence matrix, partitioned deterministically and
-    // sorted within partitions so local SGD order is reproducible.
-    // (Stage 3 of the canonical toolkit — `shuffle` — is subsumed by
-    // the hash repartition itself.) The first iteration materialises it.
+    // Stage 2: co-occurrence matrix. Each task sums its pair instances
+    // in a bounded map, and the partial cells are shuffled once, straight
+    // into the layout local SGD reads: hash-partitioned by (i, j) into
+    // numPartitions and sorted within partitions, so the update order is
+    // reproducible. That one shuffle stands in for stage 3 of the
+    // canonical toolkit (`shuffle`). The first iteration materialises it.
     val cooc: Dataset[Cooc] = Cooccurrence.matrix(documents, words.zipWithIndex.toMap,
-        window, textCol, symmetric, distanceOverOriginalPositions)
-      .repartition(numPartitions, col("i"), col("j"))
-      .sortWithinPartitions("i", "j")
+        window, textCol, symmetric, distanceOverOriginalPositions, numPartitions)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // Stage 4: broadcast + per-partition AdaGrad + delta merge.
-    val (vecs, lossHistory) = GloveTrainer.train(
-      cooc, words.length, dim, xMax, alpha, learningRate, iterations, seed)
-    cooc.unpersist()
+    val (vecs, lossHistory) =
+      try GloveTrainer.train(cooc, words.length, dim, xMax, alpha, learningRate, iterations, seed)
+      finally cooc.unpersist()
     val out = words.indices.map(i => (words(i), i, vecs(i)))
     (spark.createDataFrame(out).toDF("word", "id", "vec"), lossHistory)
   }
@@ -125,9 +132,10 @@ class Glove(
       .matrixViaJoin(docsWithId, vocab0, window, "__gid", textCol, symmetric,
         distanceOverOriginalPositions)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (vecs, lossHistory) = new GloveBlockTrainer(dim, xMax, alpha, learningRate,
-      iterations, numPartitions, seed).train(cooc, v)
-    cooc.unpersist()
+    val (vecs, lossHistory) =
+      try new GloveBlockTrainer(dim, xMax, alpha, learningRate, iterations, numPartitions,
+        seed).train(cooc, v)
+      finally cooc.unpersist()
     // Materialised while the vocabulary is still cached: left lazy, every
     // later query on the model would rebuild the vocabulary from the corpus.
     val embeddings = vocab0
@@ -191,6 +199,9 @@ private[glove] object GloveTrainer {
 
     val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
     val coocRdd = cooc.rdd // cached parent; rdd reuse is cheap
+    // An empty matrix shows as no partition at all (AQE drops an empty
+    // shuffle) or, below, as a first iteration that trains no record.
+    require(coocRdd.getNumPartitions > 0, "empty co-occurrence matrix")
 
     var it = 0
     while (it < iterations) {
@@ -250,6 +261,7 @@ private[glove] object GloveTrainer {
       // Average deltas over the partitions that actually did work
       // (empty partitions contribute a zero delta and must not dilute).
       val (sumDelta, totalN, totalLoss, nonEmpty) = agg
+      require(it > 0 || totalN > 0, "empty co-occurrence matrix")
       val inv = 1.0 / math.max(1L, nonEmpty)
       var p = 0
       def unpack(base: Array[Double]): Unit = {
@@ -258,7 +270,7 @@ private[glove] object GloveTrainer {
       }
       unpack(wMain); unpack(wCtx); unpack(bMain); unpack(bCtx)
       unpack(gwMain); unpack(gwCtx); unpack(gbMain); unpack(gbCtx)
-      losses += (if (totalN == 0) 0.0 else totalLoss / totalN)
+      losses += totalLoss / totalN
       it += 1
     }
     val vecs = Array.tabulate(v, dim)((i, k) => (wMain(i * dim + k) + wCtx(i * dim + k)).toFloat)

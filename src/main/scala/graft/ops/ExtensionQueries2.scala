@@ -169,8 +169,8 @@ object ExtensionQueries2 {
   // MEASURES the post-cap vocabulary and picks the geometry: this
   // fixture's 31-token vocabulary is the inverted index's worst case
   // (every doc shares most tokens → candidates are all pairs and the
-  // token join has 31 keys; PerfLab measured 125 s vs ~2 s at sf0.1),
-  // so the dense block-pair path is selected here — a Zipfian 100×
+  // token join has only 31 keys, so its tasks are few and huge), so the
+  // dense block-pair path is selected here — a Zipfian 100×
   // corpus flips to the posting-list join automatically instead of
   // silently running the O(n²/B) dense shape. Both geometries are
   // property-pinned equal, so the oracle is path-independent. The op's

@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions._
   * Determinism: ranked on the ROUNDED distance with the candidate id
   * as tiebreak.
   *
-  * Measured (PerfLab, sf0.1, identical 15 000-row output): blocked
-  * 2.22 s vs brute-force cross join 5.71 s — and the brute cost is
-  * |probes|·|candidates| while the blocked cost is neighborhood-local
-  * pairs, so the 2.6× here becomes unboundedly worse at corpus scale.
+  * Cost: the brute-force cross join is |probes|·|candidates| while the
+  * blocked join is neighborhood-local pairs, so the gap between them
+  * grows without bound with corpus size.
   */
 object GeoJoin {
 

@@ -207,10 +207,9 @@ object TextAnalysis {
     * a vanishing fraction of the corpus, so the joins are small however
     * large the corpus is.
     *
-    * Honest scale note (PerfLab, sf0.1): for a ONE-SHOT query a plain
-    * substring scan is faster (0.04 s vs 0.31 s — one codegen pass, no
-    * shuffle) and remains the right tool when the corpus is scanned
-    * anyway. The postings formulation is what you want when the
+    * Scale note: for a ONE-SHOT query a plain substring scan is cheaper
+    * (one codegen pass, no shuffle) and remains the right tool when the
+    * corpus is scanned anyway. The postings formulation is what you want when the
     * (doc, pos) postings are MATERIALIZED once and reused across many
     * queries (the inverted-index regime), when terms must match at
     * token granularity (a substring scan false-positives across token

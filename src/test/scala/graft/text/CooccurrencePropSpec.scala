@@ -104,4 +104,44 @@ class CooccurrencePropSpec extends AnyFunSuite with SparkFixture {
       }
     }
   }
+
+  test("a tiny map bound flushes many times and leaves the cells unchanged") {
+    // A bound of 2 cells flushes the map after every pair step, in every
+    // partition; the summed cells must equal the default bound's, for both
+    // kernels, both window kinds and both distance modes.
+    val vocab = Map("a" -> 0, "b" -> 1, "c" -> 2) // d, e are OOV
+    val vocabDf = spark.createDataFrame(vocab.toSeq).toDF("w", "id0")
+    def cells(m: org.apache.spark.sql.Dataset[Cooc]) = m.collect().map(c => (c.i, c.j) -> c.x).toMap
+    def assertClose(a: Map[(Int, Int), Double], b: Map[(Int, Int), Double], what: String) = {
+      assert(a.keySet == b.keySet, what)
+      a.foreach { case (k, x) => assert(math.abs(b(k) - x) < 1e-9, s"$what at $k") }
+    }
+    for (docs <- samples(corpusGen, 3); w <- Seq(1, 3); sym <- Seq(true, false);
+         canonical <- Seq(false, true)) {
+      val df = spark.createDataFrame(docs).toDF("doc_id", "text")
+      val what = s"w=$w symmetric=$sym canonical=$canonical"
+      val default = cells(Cooccurrence.matrix(df, vocab, w, "text", sym, canonical))
+      assertClose(cells(Cooccurrence.matrix(df, vocab, w, "text", sym, canonical, 3, 2)),
+        default, s"matrix, $what")
+      assertClose(cells(Cooccurrence.matrixViaJoin(df, vocabDf, w, "doc_id", "text", sym,
+        canonical, 3, 2)), default, s"matrixViaJoin, $what")
+    }
+  }
+
+  test("with no OOV token, tiny-bound cells equal the wordPairs aggregate") {
+    val vocab = Map("a" -> 0, "b" -> 1, "c" -> 2, "d" -> 3, "e" -> 4)
+    val vocabDf = spark.createDataFrame(vocab.toSeq).toDF("w", "id0")
+    for (docs <- samples(corpusGen, 3); w <- Seq(1, 3); sym <- Seq(true, false)) {
+      val df = spark.createDataFrame(docs).toDF("doc_id", "text")
+      val agg = Cooccurrence.wordPairs(df, w, symmetric = sym)
+        .groupBy("w1", "w2").agg(sum("wt")).collect()
+        .map(r => (vocab(r.getString(0)), vocab(r.getString(1))) -> r.getDouble(2)).toMap
+      for (m <- Seq(Cooccurrence.matrix(df, vocab, w, "text", sym, false, 3, 2),
+          Cooccurrence.matrixViaJoin(df, vocabDf, w, "doc_id", "text", sym, true, 3, 2))) {
+        val got = m.collect().map(c => (c.i, c.j) -> c.x).toMap
+        assert(got.keySet == agg.keySet, s"w=$w symmetric=$sym")
+        got.foreach { case (k, x) => assert(math.abs(agg(k) - x) < 1e-9, s"w=$w symmetric=$sym at $k") }
+      }
+    }
+  }
 }

@@ -119,4 +119,23 @@ class CooccurrenceSpec extends AnyFunSuite with SparkFixture {
     val asMap = m.map(c => (c.i, c.j) -> c.x).toMap
     assert(asMap.forall { case ((i, j), x) => math.abs(asMap((j, i)) - x) < 1e-9 })
   }
+
+  test("matrix cells are hash-partitioned by (i, j) and sorted within partitions") {
+    // The broadcast trainer reads this layout as it is: partition
+    // pmod(hash(i, j), n), ascending (i, j) inside each partition.
+    val n = 3
+    val vocab = Vector("a", "b", "c", "d", "e", "f", "g").zipWithIndex.toMap // h is OOV
+    val m = Cooccurrence.matrix(randomCorpus(40, 5L), vocab, 3, "text", true, false, n)
+    assert(m.rdd.getNumPartitions == n)
+    val rows = m.select(spark_partition_id().as("p"),
+        pmod(hash(col("i"), col("j")), lit(n)).as("want"), col("i"), col("j"))
+      .collect()
+    assert(rows.map(_.getInt(0)).distinct.length == n)
+    assert(rows.forall(r => r.getInt(0) == r.getInt(1)), "a cell outside its hash partition")
+    rows.groupBy(_.getInt(0)).foreach { case (p, part) =>
+      val keys = part.map(r => (r.getInt(2), r.getInt(3))).toSeq
+      assert(keys.zip(keys.drop(1)).forall { case (a, b) => Ordering[(Int, Int)].lt(a, b) },
+        s"partition $p is not sorted by (i, j)")
+    }
+  }
 }
